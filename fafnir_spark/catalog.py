@@ -401,6 +401,11 @@ class Catalog:
         text = self._read_text(os.path.join(self.root, name + ".json"))
         return None if text is None else json.loads(text)
 
+    def snapshot_stats(self, manifest: dict) -> dict:
+        """Index stats of a snapshot: the copy published in its manifest
+        meta, else (older indexes) the stats sidecar."""
+        return (manifest.get("meta") or {}).get("stats") or self.read_json("stats")
+
 
 class CommitConflict(RuntimeError):
     """Another snapshot was committed during a read-modify-write cycle

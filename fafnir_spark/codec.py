@@ -40,9 +40,13 @@ def _varint_byte_offsets(v: np.ndarray) -> np.ndarray:
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a uint64 array. Vectorized: O(10) numpy passes."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
+    if len(v) == 0:
         return b""
+    return _varint_encode_offsets(v)[0]
+
+
+def _varint_encode_offsets(v: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """(LEB128 bytes, per-value byte offsets) of a non-empty uint64 array."""
     offs = _varint_byte_offsets(v)
     nb = np.diff(offs)
     out = np.zeros(offs[-1], dtype=np.uint8)
@@ -54,7 +58,7 @@ def varint_encode(values: np.ndarray) -> bytes:
         byte = ((v[mask] >> np.uint64(7 * j)) & _U64_7F).astype(np.uint8)
         cont = ((nb[mask] - 1 > j).astype(np.uint8)) << 7
         out[idx] = byte | cont
-    return out.tobytes()
+    return out.tobytes(), offs
 
 
 def varint_encode_segments(values: np.ndarray, seg_lo: np.ndarray,
@@ -67,8 +71,7 @@ def varint_encode_segments(values: np.ndarray, seg_lo: np.ndarray,
     v = np.ascontiguousarray(values, dtype=np.uint64)
     if len(v) == 0:
         return [b""] * len(seg_lo)
-    buf = varint_encode(v)
-    offs = _varint_byte_offsets(v)
+    buf, offs = _varint_encode_offsets(v)
     return [buf[offs[lo]:offs[hi]] for lo, hi in zip(seg_lo, seg_hi)]
 
 
@@ -104,14 +107,6 @@ def delta_decode(buf: bytes) -> np.ndarray:
     if len(d) == 0:
         return d
     return np.cumsum(d, dtype=np.uint64)
-
-
-def f32_encode(values: np.ndarray) -> bytes:
-    return np.ascontiguousarray(values, dtype="<f4").tobytes()
-
-
-def f32_decode(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<f4").astype(np.float64)
 
 
 def positions_encode(pos_lists: list[np.ndarray]) -> bytes:

@@ -656,7 +656,7 @@ def rollover_write(
     if gens:
         cur = gens[-1]
         cat = Catalog(cur)
-        stats = (cat.read_manifest().get("meta") or {}).get("stats") or cat.read_json("stats")
+        stats = cat.snapshot_stats(cat.read_manifest())
         if int(stats["n_docs"]) < max_docs_per_gen:
             append_index(spark, docs, cur, segment=f"roll{len(gens):03d}",
                          tokenizer=tokenizer)

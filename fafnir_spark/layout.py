@@ -74,13 +74,6 @@ def zorder_key(x: str, y: str, stats: dict, bits: int = 8) -> F.Column:
     return F.expr(_interleave(bx, by, bits, spark=True))
 
 
-def zorder_key_sql(x: str, y: str, stats: dict, bits: int = 8) -> str:
-    """DuckDB mirror of zorder_key — same generator, same operand order."""
-    bx = _bucket_lit(x, float(stats[x][0]), float(stats[x][1]), bits, False)
-    by = _bucket_lit(y, float(stats[y][0]), float(stats[y][1]), bits, False)
-    return _interleave(bx, by, bits, spark=False)
-
-
 def _bucket_stats_col(col: str, mn: str, mx: str, bits: int,
                       spark: bool) -> str:
     """Affine rank-bucket against RELATIONAL stats columns (mn/mx from a

@@ -63,9 +63,9 @@ def lit_doubles_2d(rows) -> Column:
     import math
 
     mat = [[float(x) for x in row] for row in rows]
-    if not mat or not all(
-        math.isfinite(v) for row in mat for v in row
-    ):
+    if not mat:
+        return F.array().cast("array<array<double>>")
+    if not all(math.isfinite(v) for row in mat for v in row):
         return F.array(*[lit_doubles(row) for row in mat])
     return F.expr(
         "array(" + ",".join(

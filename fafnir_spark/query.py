@@ -42,10 +42,6 @@ def doc_term_freqs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def doc_lengths(tf: DataFrame) -> DataFrame:
-    return tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-
-
 def term_dfs(tf: DataFrame) -> DataFrame:
     """Document frequency per term — THE core index aggregation
     (SURVEY.md §2.4)."""

@@ -489,7 +489,7 @@ def more_like_this_indexed(
 
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    stats = cat.snapshot_stats(manifest)
     terms_l, tfs_l, _dl, _pos = TOKENIZERS[tokenizer](pd.Series([like_text]))[0]
     empty = "qid string, rank int, doc_id long, score double"
     if not terms_l:

@@ -11,6 +11,17 @@ reference, pinned by tests/tests.rs:208-228):
   decode + score, optional block-max fragment pruning) →
   global merge: window rank over (score desc, doc_id asc), limit k.
 
+That lifecycle lives in ONE place, the scatter-gather kernel below
+(_Snapshot → _scatter → _shard_search): _Snapshot reads the manifest,
+stats, dictionary and tombstones; _scatter runs an op's per-shard numpy
+``evaluate(pdf, side)`` — cogrouped on doc_part with the side relation
+(qid, doc_id, kind, doc_part) when there is one (bulk tombstones are kind
+'b' rows, phrase/range gates 'p'/'n'), a plain grouped map otherwise;
+_shard_search adds the per-qid global merge. Every indexed top-k op
+(run_queries, Searcher, bool_search, sqs_search, search_lm,
+search_after_indexed, phrase_search, phrase_bm25, routed_search, and
+federate.search_federated) is its evaluate plus op-specific setup.
+
 Exactness: doc_part partitions documents, so a document's full score is
 computed inside exactly one shard; merging per-shard top-k therefore yields
 the exact global top-k (the reference's ES does the same per-shard top-k +
@@ -447,6 +458,151 @@ def score_bmw(
     return best_ids, best_sc
 
 
+# ---------- scatter-gather kernel (see the module docstring) ----------
+
+
+def _bm25_idfs(n_docs: int, dfs: dict[str, int]) -> dict[str, float]:
+    """BM25 idf per term from its document frequency."""
+    return {t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)) for t, df in dfs.items()}
+
+
+def _with_doc_part(df: DataFrame, n_parts: int) -> DataFrame:
+    """Tag doc_id rows with the doc_part shard holding the doc's postings."""
+    return df.withColumn("doc_part", F.pmod(F.col("doc_id"), F.lit(n_parts)).cast("int"))
+
+
+def _bulk_side(bulk: DataFrame | None, stats: dict) -> DataFrame | None:
+    """Bulk tombstones as a side relation: kind 'b' rows for every qid."""
+    if bulk is None:
+        return None
+    return _with_doc_part(
+        bulk.select(F.lit("*").alias("qid"), "doc_id", F.lit("b").alias("kind")),
+        stats["n_parts"])
+
+
+def _side_excluded(excluded, side: pd.DataFrame | None):
+    """``excluded`` plus this shard's bulk-deleted ids (side kind 'b')."""
+    if side is None or not len(side):
+        return excluded
+    bids = side.loc[side["kind"] == "b", "doc_id"]
+    return _UnionExc(excluded, bids.to_numpy(dtype=np.int64)) if len(bids) else excluded
+
+
+def _blocks_by_term(pdf: pd.DataFrame) -> dict[str, list[_Block]]:
+    """One shard's posting rows as (undecoded) blocks per term."""
+    by_term: dict[str, list[_Block]] = {}
+    for r in pdf.itertuples(index=False):
+        by_term.setdefault(r.term, []).append(
+            _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
+                   r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
+        )
+    return by_term
+
+
+def _term_ids(blocks: list[_Block], excluded) -> np.ndarray:
+    """Sorted unique live doc_ids of one term's blocks."""
+    arrs = []
+    for blk in blocks:
+        ids = blk.decode()[0]
+        exc = _exc_for(excluded, blk.seg)
+        if exc is not None and len(exc):
+            ids = ids[~np.isin(ids, exc)]
+        arrs.append(ids)
+    return np.unique(np.concatenate(arrs)) if arrs else np.empty(0, dtype=np.int64)
+
+
+def _result_frame(hits: list[tuple]) -> pd.DataFrame:
+    """RESULT_SCHEMA rows from (qid, doc_ids, raw_scores) triples."""
+    hits = [h for h in hits if len(h[1])]
+    if not hits:
+        return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
+            {"doc_id": np.int64, "raw_score": np.float64}
+        )
+    return pd.DataFrame({
+        "qid": [qid for qid, ids, _ in hits for _i in range(len(ids))],
+        "doc_id": np.concatenate([ids for _, ids, _ in hits]),
+        "raw_score": np.concatenate([sc for _, _, sc in hits]),
+    })
+
+
+class _Snapshot:
+    """One published snapshot as indexed queries read it: manifest, stats,
+    the posting table, dictionary lookups (cached, so a long-lived Searcher
+    pays for each term once), point tombstones for the decode closure and
+    bulk tombstones as a side relation. It holds the SparkSession, so
+    per-shard closures capture its fields, never the snapshot itself."""
+
+    def __init__(self, spark: SparkSession, index_root: str, snapshot_id: str | None = None):
+        self.spark = spark
+        self.cat = Catalog(index_root)
+        self.manifest = self.cat.manifest_at(snapshot_id)
+        self.stats = self.cat.snapshot_stats(self.manifest)
+        self.postings = self.cat.read_table(spark, "postings", snapshot=self.manifest)
+        # tombstones (incremental deletes/upserts) are filtered at decode
+        # time, ES-style, scoped per segment (a stable-id upsert keeps one
+        # live version). Point tombstones are driver-small and ride in the
+        # closure; bulk (mass-delete) tombstones stay a RELATION, cogrouped
+        # on doc_part so each shard receives only its own dead ids — a
+        # GDPR-scale purge never materializes on the driver.
+        self.tombs = _load_tombstones(spark, self.cat, self.manifest, include_bulk=False)
+        self.side = _bulk_side(_load_bulk_df(spark, self.cat, self.manifest), self.stats)
+        self._rows: dict = {}
+        self._missing: set[str] = set()
+
+    def lookup(self, terms: list[str]) -> dict:
+        """Dictionary rows (term, df, cf) of those ``terms`` that exist."""
+        unknown = [t for t in terms if t not in self._rows and t not in self._missing]
+        if unknown:
+            rows = (
+                self.cat.read_dictionary(self.spark, snapshot=self.manifest)
+                .filter(F.col("term").isin(unknown))
+                .collect()
+            )
+            self._rows.update((r["term"], r) for r in rows)
+            self._missing.update(set(unknown) - {r["term"] for r in rows})
+        return {t: self._rows[t] for t in terms if t in self._rows}
+
+    def idfs(self, terms: list[str]) -> dict[str, float]:
+        return _bm25_idfs(self.stats["n_docs"],
+                          {t: r["df"] for t, r in self.lookup(terms).items()})
+
+    def scan(self, terms: list[str]) -> DataFrame:
+        """The term-filtered posting scan (predicate pushed to parquet)."""
+        return self.postings.filter(F.col("term").isin(terms))
+
+
+def _scatter(postings: DataFrame, side: DataFrame | None, evaluate,
+             schema: str = RESULT_SCHEMA, keys: tuple = ("doc_part",)) -> DataFrame:
+    """Run ``evaluate(pdf, side_pdf)`` once per shard. With a side relation
+    the postings are cogrouped with it on the shard keys, so each shard
+    receives only its own side rows; without one it is a plain grouped map
+    and ``side_pdf`` is None."""
+    shards = postings.groupBy(*keys)
+    if side is None:
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            return evaluate(pdf, None)
+
+        return shards.applyInPandas(fn, schema=schema)
+    return shards.cogroup(side.groupBy(*keys)).applyInPandas(evaluate, schema=schema)
+
+
+def _shard_search(postings: DataFrame, side: DataFrame | None, evaluate, k: int,
+                  decimals: int = 6, keys: tuple = ("doc_part",)) -> DataFrame:
+    """The kernel: per-shard exact top-k (_scatter), then the global merge —
+    rank per qid over (rounded score desc, doc_id asc), keep k. A doc's
+    whole score lives in one shard, so the merge is exact.
+    (qid, rank, doc_id, score)."""
+    per_part = _scatter(postings, side, evaluate, keys=keys)
+    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return (
+        per_part.withColumn("score", F.round(F.col("raw_score"), decimals))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "doc_id", "score")
+        .orderBy("qid", "rank")
+    )
+
+
 def _part_scorer(
     queries: dict[str, list[str]],
     idfs: dict[str, float],
@@ -454,62 +610,39 @@ def _part_scorer(
     k: int,
     algo: str,
     excluded: np.ndarray | None = None,
-    with_bulk: bool = False,
 ):
-    """``with_bulk``: returns a COGROUP fn (postings, bulk-tombstone rows of
-    the same doc_part) — each shard receives only ITS deleted ids through
-    the shuffle, so a mass delete never touches the driver."""
+    """Per-shard BM25 top-k of every query (BMW or exhaustive)."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
     scorer = score_bmw if algo == "bmw" else score_exhaustive
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc = _side_excluded(excluded, side)
+        by_term = _blocks_by_term(pdf)
+        hits = []
         for qid, terms in queries.items():
             tb = {t: by_term[t] for t in terms if t in by_term}
-            if not tb:
-                continue
-            ids, sc = scorer(tb, idfs, k, k1, b, avgdl, excluded=exc)
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "qid": out_qid,
-                "doc_id": np.concatenate(out_doc),
-                "raw_score": np.concatenate(out_sc),
-            }
-        )
+            if tb:
+                hits.append((qid, *scorer(tb, idfs, k, k1, b, avgdl, excluded=exc)))
+        return _result_frame(hits)
 
-    if not with_bulk:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
+    return evaluate
 
-        return fn
 
-    def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, tdf)
-
-    return cofn
+def _bm25_search(snap: _Snapshot, queries: dict[str, list[str]], k: int, algo: str,
+                 decimals: int = 6) -> DataFrame:
+    """run_queries / Searcher.search over an open snapshot."""
+    all_terms = sorted({t for ts in queries.values() for t in ts})
+    idfs = snap.idfs(all_terms)
+    postings = snap.scan([t for t in all_terms if t in idfs])
+    return _shard_search(postings, snap.side,
+                         _part_scorer(queries, idfs, snap.stats, k, algo, snap.tombs),
+                         k, decimals)
 
 
 PHRASE_SCHEMA = "qid string, doc_id long"
 
 
-def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
-                    with_bulk: bool = False, slop: int = 0):
+def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None, slop: int = 0):
     """Per-doc_part exact phrase matching over positional postings.
     With ``slop`` > 0 (2-term phrases only, enforced by the caller) the
     adjacency test relaxes to the ordered within-window contract of
@@ -521,15 +654,11 @@ def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
 
     Tombstone exclusion is applied per BLOCK (seg-scoped): an upserted doc's
     old-segment positions are dropped while its keep_seg version survives,
-    so the merged per-term arrays never contain duplicate doc_ids.
-
-    ``with_bulk``: returns a COGROUP fn (postings, bulk-tombstone rows of
-    the same doc_part) — each shard receives only ITS mass-deleted ids
-    through the shuffle (the run_queries pattern, no driver envelope)."""
+    so the merged per-term arrays never contain duplicate doc_ids."""
     from .codec import positions_decode
 
-    def run(pdf: pd.DataFrame, bulk_ids: np.ndarray | None) -> pd.DataFrame:
-        exc_all = excluded if bulk_ids is None else _UnionExc(excluded, bulk_ids)
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc_all = _side_excluded(excluded, side)
         # decode per-term posting arrays (ids, tfs, positions) for the part
         per_term: dict[str, tuple] = {}
         for term, grp in pdf.groupby("term"):
@@ -605,17 +734,7 @@ def _phrase_part_fn(phrases: dict[str, list[str]], excluded=None,
                 out_doc.extend(int(d) for d in hits)
         return pd.DataFrame({"qid": out_qid, "doc_id": np.array(out_doc, dtype=np.int64)})
 
-    if with_bulk:
-        def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-            ids = tdf["doc_id"].to_numpy(dtype=np.int64) if len(tdf) else None
-            return run(pdf, ids)
-
-        return cofn
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return run(pdf, None)
-
-    return fn
+    return evaluate
 
 
 def _phrase_score_fn(
@@ -626,7 +745,8 @@ def _phrase_score_fn(
     excluded=None,
 ):
     """Cogrouped scorer: (postings of one doc_part) × (phrase matches of the
-    same part) → BM25 scores of ONLY the matched docs, per-shard top-k.
+    same part, side kind 'p') → BM25 scores of ONLY the matched docs,
+    per-shard top-k.
 
     ``excluded`` (seg-scoped tombstones) is threaded into score_exhaustive:
     after a stable-id upsert the live doc_id also appears in the OLD
@@ -634,37 +754,20 @@ def _phrase_score_fn(
     summed into the phrase score."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def fn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-            {"doc_id": np.int64, "raw_score": np.float64}
-        )
-        if not len(pdf) or not len(mdf):
-            return empty
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
+        if not len(pdf) or not len(side):
+            return _result_frame([])
+        by_term = _blocks_by_term(pdf)
+        hits = []
         for qid, terms in queries.items():
-            inc = np.sort(mdf.loc[mdf["qid"] == qid, "doc_id"].to_numpy(dtype=np.int64))
+            inc = np.sort(side.loc[side["qid"] == qid, "doc_id"].to_numpy(dtype=np.int64))
             tb = {t: by_term[t] for t in terms if t in by_term}
-            if not len(inc) or not tb:
-                continue
-            ids, sc = score_exhaustive(
-                tb, idfs, k, k1, b, avgdl, included=inc, excluded=excluded
-            )
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return empty
-        return pd.DataFrame(
-            {"qid": out_qid, "doc_id": np.concatenate(out_doc), "raw_score": np.concatenate(out_sc)}
-        )
+            if len(inc) and tb:
+                hits.append((qid, *score_exhaustive(
+                    tb, idfs, k, k1, b, avgdl, included=inc, excluded=excluded)))
+        return _result_frame(hits)
 
-    return fn
+    return evaluate
 
 
 def phrase_bm25(
@@ -682,37 +785,19 @@ def phrase_bm25(
     doc_part, so ONLY matched docs are ever scored (no score-everything
     pass) and per-shard top-k keeps the global merge at k rows per shard —
     a doc's whole score lives in one shard, so the merge is exact."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    matches = phrase_search(spark, index_root, phrases, snapshot_id).withColumn(
-        "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-    )
+    snap = _Snapshot(spark, index_root, snapshot_id)
+    matches = _with_doc_part(
+        phrase_search(spark, index_root, phrases, snapshot_id)
+        .select("qid", "doc_id", F.lit("p").alias("kind")),
+        snap.stats["n_parts"])
     all_terms = sorted({t for ts in phrases.values() for t in ts})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin([t for t in all_terms if t in idfs])
-    )
-    # only point tombstones here (seg-scoped upsert staleness): bulk-dead
-    # docs are already excluded relationally in phrase_search's match stage,
-    # and the scorer's `included` restriction means a doc absent from the
-    # matches is never scored — so bulk never needs to enter this closure.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    per_part = postings.groupBy("doc_part").cogroup(matches.groupBy("doc_part")).applyInPandas(
-        _phrase_score_fn(phrases, idfs, stats, k, excluded), schema=RESULT_SCHEMA
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    idfs = snap.idfs(all_terms)
+    # the side is the phrase matches only: bulk-dead docs are already
+    # excluded relationally in phrase_search's match stage, and the
+    # scorer's `included` restriction means a doc absent from the matches
+    # is never scored. Point tombstones still apply (upsert staleness).
+    return _shard_search(snap.scan([t for t in all_terms if t in idfs]), matches,
+                         _phrase_score_fn(phrases, idfs, snap.stats, k, snap.tombs), k)
 
 
 def phrase_search(
@@ -731,38 +816,12 @@ def phrase_search(
     if slop > 0 and any(len(ts) != 2 for ts in phrases.values()):
         raise ValueError("slop > 0 supports 2-term phrases (the documented "
                          "ordered-window contract)")
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    all_terms = sorted({t for ts in phrases.values() for t in ts})
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
-    if "positions" not in postings.columns:
+    snap = _Snapshot(spark, index_root, snapshot_id)
+    if "positions" not in snap.postings.columns:
         raise ValueError("index lacks positions; build with with_positions=True")
-    # point tombstones stay in the (driver-small) closure; bulk mass-delete
-    # tombstones are a RELATION, cogrouped on doc_part so each shard receives
-    # only its own dead ids — no closure envelope on the phrase path.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    if bulk is not None:
-        stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        return (
-            postings.groupBy("doc_part")
-            .cogroup(bp.groupBy("doc_part"))
-            .applyInPandas(
-                _phrase_part_fn(phrases, excluded, with_bulk=True, slop=slop),
-                schema=PHRASE_SCHEMA)
-            .orderBy("qid", "doc_id")
-        )
-    return (
-        postings.groupBy("doc_part")
-        .applyInPandas(_phrase_part_fn(phrases, excluded, slop=slop),
-                       schema=PHRASE_SCHEMA)
-        .orderBy("qid", "doc_id")
-    )
+    postings = snap.scan(sorted({t for ts in phrases.values() for t in ts}))
+    return _scatter(postings, snap.side, _phrase_part_fn(phrases, snap.tombs, slop=slop),
+                    schema=PHRASE_SCHEMA).orderBy("qid", "doc_id")
 
 
 MATCH_SCHEMA = "doc_id long"
@@ -850,50 +909,30 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
     score; per-shard exact top-k (a doc's postings live in ONE shard, so
     the intersection and the merge are both exact).
 
-    With ``n_pos`` (qid → number of required positive phrases) the
-    returned fn is a COGROUP fn (postings, phrase-matches of the same
-    doc_part): matches rows (qid, doc_id, kind) gate eligibility — kind
-    'p' rows must cover all n_pos[qid] phrases for a doc to qualify, kind
-    'n' rows (negated phrases) exclude. Matched ids never ship to the
-    driver; a doc's phrase matches live in the SAME shard as its postings,
-    so the intersection is exact."""
+    Side rows (qid, doc_id, kind) of the same doc_part gate eligibility:
+    with ``n_pos`` (qid → number of required positive phrases) kind 'p'
+    rows must cover all n_pos[qid] phrases for a doc to qualify, kind 'n'
+    rows (negated phrases) exclude, kind 'b' rows (bulk tombstones) are
+    dead for every query. Matched ids never ship to the driver; a doc's
+    phrase matches live in the SAME shard as its postings, so the
+    intersection is exact."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    n_pos = n_pos or {}
 
-    def evaluate(pdf: pd.DataFrame, mdf: pd.DataFrame | None) -> pd.DataFrame:
-        # kind 'b' rows are this doc_part's slice of the bulk mass-delete
-        # table (cogrouped, never driver-resident) — a global exclusion
-        # folded into the tombstone provider for every query.
-        eff_tombs = tombs
-        if mdf is not None and len(mdf):
-            bids = mdf.loc[mdf["kind"] == "b", "doc_id"]
-            if len(bids):
-                eff_tombs = _UnionExc(tombs, bids.to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        eff_tombs = _side_excluded(tombs, side)
+        by_term = _blocks_by_term(pdf)
 
         def term_ids(t: str) -> np.ndarray:
-            arrs = []
-            for blk in by_term.get(t, []):
-                ids = blk.decode()[0]
-                exc = _exc_for(eff_tombs, blk.seg)
-                if exc is not None and len(exc):
-                    ids = ids[~np.isin(ids, exc)]
-                arrs.append(ids)
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(arrs))
+            return _term_ids(by_term.get(t, []), eff_tombs)
 
         def match_ids(qid: str, kind: str) -> np.ndarray:
-            if mdf is None or not len(mdf):
+            if side is None or not len(side):
                 return np.empty(0, dtype=np.int64)
-            sub = mdf[(mdf["qid"] == qid) & (mdf["kind"] == kind)]
+            sub = side[(side["qid"] == qid) & (side["kind"] == kind)]
             return sub["doc_id"].to_numpy(dtype=np.int64)
 
-        out_qid, out_doc, out_sc = [], [], []
+        hits = []
         for qid, spec in queries.items():
             must = sorted(set(spec.get("must") or []))
             should = sorted(set(spec.get("should") or []))
@@ -904,7 +943,7 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
             if not tb:
                 continue
             inc = None
-            if n_pos is not None and n_pos.get(qid):
+            if n_pos.get(qid):
                 # positive phrase gate: a doc qualifies iff it matched ALL
                 # n_pos[qid] phrases (one unique match row per phrase)
                 pos = match_ids(qid, "p")
@@ -925,10 +964,9 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
             if not satisfiable or (inc is not None and not len(inc)):
                 continue
             extra_exc: list[np.ndarray] = []
-            if n_pos is not None:
-                neg = match_ids(qid, "n")
-                if len(neg):
-                    extra_exc.append(np.unique(neg))
+            neg = match_ids(qid, "n")
+            if len(neg):
+                extra_exc.append(np.unique(neg))
             if must_not:
                 extra_exc.extend(a for a in (term_ids(t) for t in must_not) if len(a))
             excluded = eff_tombs
@@ -940,29 +978,36 @@ def _bool_part_fn(queries: dict[str, dict], idfs: dict[str, float], stats: dict,
                         continue
                 else:
                     excluded = _UnionExc(eff_tombs, extra)
-            ids, sc = score_exhaustive(tb, idfs, k, k1, b, avgdl,
-                                       excluded=excluded, included=inc)
-            out_qid.extend([qid] * len(ids))
-            out_doc.append(ids)
-            out_sc.append(sc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame(
-            {"qid": out_qid, "doc_id": np.concatenate(out_doc), "raw_score": np.concatenate(out_sc)}
-        )
+            hits.append((qid, *score_exhaustive(tb, idfs, k, k1, b, avgdl,
+                                                excluded=excluded, included=inc)))
+        return _result_frame(hits)
 
-    if n_pos is None:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
+    return evaluate
 
-        return fn
 
-    def cofn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, mdf)
+def _clause_terms(queries: dict[str, dict], keys: tuple) -> list[str]:
+    return sorted({t for spec in queries.values() for key in keys for t in (spec.get(key) or [])})
 
-    return cofn
+
+def _bool_search(snap: _Snapshot, queries: dict[str, dict], k: int,
+                 matches: DataFrame | None = None, n_pos: dict[str, int] | None = None,
+                 boosts: dict[str, float] | None = None) -> DataFrame:
+    """bool_search / Searcher.search_bool over an open snapshot."""
+    idfs = snap.idfs(_clause_terms(queries, ("must", "should")))
+    if boosts:
+        # term^boost multiplies the term's score contribution — and since
+        # score = Σ idf·tfn·w, pre-multiplying the idf IS the boost (no
+        # change to the scorer, bounds stay conservative for BMW)
+        idfs = {t: v * float(boosts.get(t, 1.0)) for t, v in idfs.items()}
+    # phrase/range gates join the bulk tombstones on the side relation
+    side = snap.side
+    if matches is not None:
+        side = _with_doc_part(matches, snap.stats["n_parts"])
+        if snap.side is not None:
+            side = side.unionByName(snap.side)
+    postings = snap.scan(_clause_terms(queries, ("must", "should", "must_not", "filter")))
+    return _shard_search(postings, side,
+                         _bool_part_fn(queries, idfs, snap.stats, k, snap.tombs, n_pos), k)
 
 
 def bool_search(
@@ -985,63 +1030,8 @@ def bool_search(
     gate eligibility by phrase matches, cogrouped with the postings on
     doc_part — match ids never ship to the driver (the phrase_bm25
     cogroup pattern, no size ceiling)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    all_terms = sorted({
-        t for spec in queries.values()
-        for key in ("must", "should", "must_not", "filter")
-        for t in (spec.get(key) or [])
-    })
-    scored_terms = sorted({
-        t for spec in queries.values()
-        for key in ("must", "should")
-        for t in (spec.get(key) or [])
-    })
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(scored_terms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
-    if boosts:
-        # term^boost multiplies the term's score contribution — and since
-        # score = Σ idf·tfn·w, pre-multiplying the idf IS the boost (no
-        # change to the scorer, bounds stay conservative for BMW)
-        idfs = {t: v * float(boosts.get(t, 1.0)) for t, v in idfs.items()}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
-    # point tombstones in the closure (driver-small by design); the bulk
-    # mass-delete table joins the phrase-match cogroup side as kind 'b'
-    # rows, so each shard receives only its own dead ids — no envelope.
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    side = matches
-    if bulk is not None:
-        bdf = bulk.select(
-            F.lit("*").alias("qid"), "doc_id", F.lit("b").alias("kind")
-        )
-        side = bdf if side is None else side.unionByName(bdf)
-    if side is not None:
-        mp = side.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(mp.groupBy("doc_part")).applyInPandas(
-            _bool_part_fn(queries, idfs, stats, k, tombs, n_pos or {}),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _bool_part_fn(queries, idfs, stats, k, tombs), schema=RESULT_SCHEMA
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    return _bool_search(_Snapshot(spark, index_root, snapshot_id), queries, k,
+                        matches, n_pos, boosts)
 
 
 def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
@@ -1053,36 +1043,14 @@ def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
     one shard). Per-shard exact top-k on rounded scores."""
     k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
 
-    def evaluate(pdf: pd.DataFrame, mdf: pd.DataFrame | None) -> pd.DataFrame:
-        eff_tombs = tombs
-        if mdf is not None and len(mdf):
-            bids = mdf.loc[mdf["kind"] == "b", "doc_id"]
-            if len(bids):
-                eff_tombs = _UnionExc(tombs, bids.to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-
-        def term_ids(t: str) -> np.ndarray:
-            arrs = []
-            for blk in by_term.get(t, []):
-                ids = blk.decode()[0]
-                exc = _exc_for(eff_tombs, blk.seg)
-                if exc is not None and len(exc):
-                    ids = ids[~np.isin(ids, exc)]
-                arrs.append(ids)
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(arrs))
-
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        eff_tombs = _side_excluded(tombs, side)
+        by_term = _blocks_by_term(pdf)
         parts_ids, parts_sc = [], []
         for g in groups:
             inc, ok = None, True
             for t in g["pos"]:
-                ids_t = term_ids(t)
+                ids_t = _term_ids(by_term.get(t, []), eff_tombs)
                 if not len(ids_t):
                     ok = False
                     break
@@ -1090,7 +1058,7 @@ def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
             if not ok or inc is None or not len(inc):
                 continue
             for t in g["neg"]:
-                ids_t = term_ids(t)
+                ids_t = _term_ids(by_term.get(t, []), eff_tombs)
                 if len(ids_t):
                     inc = inc[~np.isin(inc, ids_t)]
             if not len(inc):
@@ -1101,23 +1069,12 @@ def _sqs_part_fn(groups: list[dict], idfs: dict[str, float], stats: dict,
             parts_ids.append(ids)
             parts_sc.append(sc)
         if not parts_ids:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64})
-        ids = np.concatenate(parts_ids)
-        sc = np.concatenate(parts_sc)
-        uids, inv = np.unique(ids, return_inverse=True)
-        tot = np.bincount(inv, weights=sc)
-        top_ids, top_sc = _topk_rows(uids, tot, k)
-        return pd.DataFrame({"qid": ["q"] * len(top_ids), "doc_id": top_ids,
-                             "raw_score": top_sc})
+            return _result_frame([])
+        uids, inv = np.unique(np.concatenate(parts_ids), return_inverse=True)
+        tot = np.bincount(inv, weights=np.concatenate(parts_sc))
+        return _result_frame([("q", *_topk_rows(uids, tot, k))])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, None)
-
-    def cofn(pdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, mdf)
-
-    return fn, cofn
+    return evaluate
 
 
 def sqs_search(
@@ -1135,39 +1092,12 @@ def sqs_search(
     from .query_ext import parse_simple_query_string
 
     groups = parse_simple_query_string(q)
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    all_terms = sorted({t for g in groups for t in g["pos"] + g["neg"]})
-    scored = sorted({t for g in groups for t in g["pos"]})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(scored)).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in drows}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(all_terms))
-    tombs = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    fn, cofn = _sqs_part_fn(groups, idfs, stats, k, tombs)
-    if bulk is not None:
-        mp = bulk.select(
-            F.lit("q").alias("qid"), "doc_id", F.lit("b").alias("kind")
-        ).withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int"))
-        per_part = postings.groupBy("doc_part").cogroup(
-            mp.groupBy("doc_part")).applyInPandas(cofn, schema=RESULT_SCHEMA)
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            fn, schema=RESULT_SCHEMA)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("rank", "doc_id", "score")
-        .orderBy("rank")
-    )
+    snap = _Snapshot(spark, index_root, snapshot_id)
+    idfs = snap.idfs(sorted({t for g in groups for t in g["pos"]}))
+    postings = snap.scan(sorted({t for g in groups for t in g["pos"] + g["neg"]}))
+    return _shard_search(postings, snap.side,
+                         _sqs_part_fn(groups, idfs, snap.stats, k, snap.tombs),
+                         k).select("rank", "doc_id", "score")
 
 
 def search_text_indexed(
@@ -1257,119 +1187,23 @@ class Searcher:
     ):
         self.spark = spark
         self.index_root = index_root
-        self.cat = Catalog(index_root)
-        self.manifest = self.cat.manifest_at(snapshot_id)
-        self.stats = (self.manifest.get("meta") or {}).get("stats") or self.cat.read_json("stats")
-        self._dfs: dict[str, int] = {}
-        self._missing: set[str] = set()
-        self._postings = self.cat.read_table(spark, "postings", snapshot=self.manifest)
+        self._snap = _Snapshot(spark, index_root, snapshot_id)
+        self.cat, self.manifest, self.stats = self._snap.cat, self._snap.manifest, self._snap.stats
         self._persisted = persist_postings
         if persist_postings:
-            self._postings = self._postings.persist()
-        # point tombstones in the closure; bulk mass-deletes stay a relation
-        # (cogrouped per search call) — same split as run_queries.
-        self._excluded = _load_tombstones(spark, self.cat, self.manifest,
-                                          include_bulk=False)
-        self._bulk = _load_bulk_df(spark, self.cat, self.manifest)
-        if self._bulk is not None:
-            self._bulk = self._bulk.withColumn(
-                "doc_part",
-                F.pmod(F.col("doc_id"), F.lit(self.stats["n_parts"])).cast("int"),
-            )
-
-    def _idfs(self, terms: list[str]) -> dict[str, float]:
-        unknown = [t for t in terms if t not in self._dfs and t not in self._missing]
-        if unknown:
-            rows = (
-                self.cat.read_dictionary(self.spark, snapshot=self.manifest)
-                .filter(F.col("term").isin(unknown))
-                .collect()
-            )
-            for r in rows:
-                self._dfs[r["term"]] = r["df"]
-            self._missing.update(set(unknown) - {r["term"] for r in rows})
-        n = self.stats["n_docs"]
-        return {
-            t: math.log(1.0 + (n - self._dfs[t] + 0.5) / (self._dfs[t] + 0.5))
-            for t in terms
-            if t in self._dfs
-        }
+            self._snap.postings = self._snap.postings.persist()
 
     def search(self, queries: dict[str, list[str]], k: int = 10, algo: str = "bmw") -> DataFrame:
-        all_terms = sorted({t for ts in queries.values() for t in ts})
-        idfs = self._idfs(all_terms)
-        present = [t for t in all_terms if t in idfs]
-        postings = self._postings.filter(F.col("term").isin(present))
-        if self._bulk is not None:
-            per_part = (
-                postings.groupBy("doc_part")
-                .cogroup(self._bulk.groupBy("doc_part"))
-                .applyInPandas(
-                    _part_scorer(queries, idfs, self.stats, k, algo,
-                                 self._excluded, with_bulk=True),
-                    schema=RESULT_SCHEMA,
-                )
-            )
-        else:
-            per_part = postings.groupBy("doc_part").applyInPandas(
-                _part_scorer(queries, idfs, self.stats, k, algo, self._excluded),
-                schema=RESULT_SCHEMA,
-            )
-        w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return (
-            per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "doc_id", "score")
-            .orderBy("qid", "rank")
-        )
+        return _bm25_search(self._snap, queries, k, algo)
 
     def search_bool(self, queries: dict[str, dict], k: int = 10) -> DataFrame:
         """Bool-DSL search over the cached snapshot (see bool_search);
         ``queries``: qid → {must, should, must_not, filter}."""
-        scored_terms = sorted({
-            t for spec in queries.values()
-            for key in ("must", "should")
-            for t in (spec.get(key) or [])
-        })
-        all_terms = sorted({
-            t for spec in queries.values()
-            for key in ("must", "should", "must_not", "filter")
-            for t in (spec.get(key) or [])
-        })
-        idfs = self._idfs(scored_terms)
-        postings = self._postings.filter(F.col("term").isin(all_terms))
-        if self._bulk is not None:
-            side = self._bulk.select(
-                F.lit("*").alias("qid"), "doc_id",
-                F.lit("b").alias("kind"), "doc_part",
-            )
-            per_part = (
-                postings.groupBy("doc_part")
-                .cogroup(side.groupBy("doc_part"))
-                .applyInPandas(
-                    _bool_part_fn(queries, idfs, self.stats, k,
-                                  self._excluded, {}),
-                    schema=RESULT_SCHEMA,
-                )
-            )
-        else:
-            per_part = postings.groupBy("doc_part").applyInPandas(
-                _bool_part_fn(queries, idfs, self.stats, k, self._excluded),
-                schema=RESULT_SCHEMA,
-            )
-        w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return (
-            per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "doc_id", "score")
-            .orderBy("qid", "rank")
-        )
+        return _bool_search(self._snap, queries, k)
 
     def close(self) -> None:
         if self._persisted:
-            self._postings.unpersist()
+            self._snap.postings.unpersist()
 
 
 def attach_doc_meta(
@@ -1469,51 +1303,8 @@ def run_queries(
     (/root/reference tests/tests.rs:214-221). ``snapshot_id`` queries a
     past published snapshot (Iceberg time travel; segments are immutable).
     """
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
-    all_terms = sorted({t for ts in queries.values() for t in ts})
-
-    dictionary = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    )
-    n_docs = stats["n_docs"]
-    drows = dictionary.collect()
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5)) for r in drows}
-
-    present = [t for t in all_terms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-
-    # tombstones (incremental deletes/upserts): filtered at decode time,
-    # ES-style, scoped per segment (stable-id upsert keeps one live version).
-    # Bulk (mass-delete) tombstones stay a RELATION: cogrouped with the
-    # postings on doc_part so each shard receives only its own dead ids —
-    # a GDPR-scale purge never materializes on the driver.
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded, with_bulk=True),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded), schema=RESULT_SCHEMA
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), score_decimals))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    return _bm25_search(_Snapshot(spark, index_root, snapshot_id), queries, k, algo,
+                        score_decimals)
 
 
 def index_stats(spark: SparkSession, index_root: str,
@@ -1524,7 +1315,7 @@ def index_stats(spark: SparkSession, index_root: str,
     per (term, doc)), n_tokens = Σcf."""
     cat = Catalog(index_root)
     manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    stats = cat.snapshot_stats(manifest)
     d = cat.read_dictionary(spark, snapshot=manifest)
     return (
         d.agg(
@@ -1555,72 +1346,27 @@ def search_after_indexed(
     threshold is keyed to the kth-best score, which the cursor shifts —
     seeding θ from the cursor is the documented optimization path; the
     exhaustive form is exact at any depth. (rank, doc_id, score)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    snap = _Snapshot(spark, index_root, snapshot_id)
     qterms = sorted(set(terms))
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(qterms)
-    ).collect()
-    n_docs = stats["n_docs"]
-    idfs = {r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-            for r in drows}
+    idfs = snap.idfs(qterms)
     present = [t for t in qterms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
     cs, cd = float(cursor[0]), int(cursor[1])
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    k1, b, avgdl = snap.stats["k1"], snap.stats["b"], snap.stats["avgdl"]
+    tombs = snap.tombs
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-            {"doc_id": np.int64, "raw_score": np.float64}
-        )
-        if not len(pdf):
-            return empty
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        by_term = _blocks_by_term(pdf)
         tb = {t: by_term[t] for t in present if t in by_term}
         if not tb:
-            return empty
-        ids, sc = score_exhaustive(tb, idfs, 1 << 31, k1, b, avgdl, excluded=exc)
+            return _result_frame([])
+        ids, sc = score_exhaustive(tb, idfs, 1 << 31, k1, b, avgdl,
+                                   excluded=_side_excluded(tombs, side))
         rs = np.round(sc, _ROUND_DECIMALS)
         keep = (rs < cs) | ((rs == cs) & (ids > cd))
-        ids, sc = _topk_rows(ids[keep], sc[keep], k)
-        return pd.DataFrame({"qid": ["q"] * len(ids), "doc_id": ids, "raw_score": sc})
+        return _result_frame([("q", *_topk_rows(ids[keep], sc[keep], k))])
 
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            evaluate, schema=RESULT_SCHEMA
-        )
-    else:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
-
-        per_part = postings.groupBy("doc_part").applyInPandas(fn, schema=RESULT_SCHEMA)
-    w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    top = (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select("rank", "doc_id", "score")
-        .orderBy("rank")
-    )
+    return _shard_search(snap.scan(present), snap.side, evaluate, k).select(
+        "rank", "doc_id", "score")
 
 
 def search_alias(
@@ -1771,26 +1517,12 @@ def _feature_score_indexed(
     point/upsert tombstones via the decode-time exclusion, bulk-deleted
     docs by having no live doc-values row (never a driver
     materialization). (rank, doc_id, score)."""
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    snap = _Snapshot(spark, index_root, snapshot_id)
     qterms = sorted(set(terms))
-    drows = (
-        cat.read_dictionary(spark, snapshot=manifest)
-        .filter(F.col("term").isin(qterms))
-        .collect()
-    )
-    n_docs = stats["n_docs"]
-    idfs = {
-        r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in drows
-    }
+    idfs = snap.idfs(qterms)
     present = [t for t in qterms if t in idfs]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    ldm = cat.live_doc_map(spark, manifest)
+    excluded = snap.tombs
+    ldm = snap.cat.live_doc_map(spark, snap.manifest)
     if feature_df is not None:
         # external per-doc feature (e.g. a vector-similarity multiplier):
         # the inner join against the live doc map keeps delete semantics —
@@ -1803,21 +1535,14 @@ def _feature_score_indexed(
         )
     else:
         dv = ldm.select("doc_id", F.col(field).cast("double").alias("__v"))
-    dv = dv.withColumn(
-        "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-    )
-    k1, b, avgdl = stats["k1"], stats["b"], stats["avgdl"]
+    dv = _with_doc_part(dv, snap.stats["n_parts"])
+    k1, b, avgdl = snap.stats["k1"], snap.stats["b"], snap.stats["avgdl"]
 
     def fn(pdf: pd.DataFrame, ddf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"doc_id": np.empty(0, dtype=np.int64), "score": np.empty(0)}
         )
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
+        by_term = _blocks_by_term(pdf)
         tb = {t: by_term[t] for t in present if t in by_term}
         if not tb or not len(ddf):
             return empty
@@ -1840,7 +1565,7 @@ def _feature_score_indexed(
         return pd.DataFrame({"doc_id": ids[order], "score": final[order]})
 
     per_part = (
-        postings.groupBy("doc_part")
+        snap.scan(present).groupBy("doc_part")
         .cogroup(dv.groupBy("doc_part"))
         .applyInPandas(fn, schema="doc_id long, score double")
     )
@@ -1916,22 +1641,12 @@ def sparse_vector_indexed(
     (rank, doc_id, score)."""
     from pyspark.sql.window import Window
 
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    snap = _Snapshot(spark, index_root, snapshot_id)
     qterms = sorted(query_weights)
     weights = {t: float(query_weights[t]) for t in qterms}
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(qterms)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    live = (
-        cat.live_doc_map(spark, manifest)
-        .select("doc_id")
-        .withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-    )
+    excluded = snap.tombs
+    live = _with_doc_part(snap.cat.live_doc_map(spark, snap.manifest).select("doc_id"),
+                          snap.stats["n_parts"])
 
     def fn(pdf: pd.DataFrame, ldf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1968,7 +1683,7 @@ def sparse_vector_indexed(
         return pd.DataFrame({"doc_id": uids, "raw_score": sums})
 
     per_part = (
-        postings.groupBy("doc_part")
+        snap.scan(qterms).groupBy("doc_part")
         .cogroup(live.groupBy("doc_part"))
         .applyInPandas(fn, schema="doc_id long, raw_score double")
     )
@@ -1980,8 +1695,7 @@ def sparse_vector_indexed(
 
 def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
                 k: int, smoothing: str, mu: float, lam: float,
-                excluded=None, with_bulk: bool = False,
-                k1b: tuple = (None, None)):
+                excluded=None, k1b: tuple = (None, None)):
     """Per-doc_part LM-similarity scorer (the _part_scorer shape with the
     Zhai & Lafferty formulas instead of BM25):
 
@@ -1998,17 +1712,10 @@ def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
     top-k + k-row merge, the scale shape is unchanged)."""
     one_minus = 1.0 - float(lam)
 
-    def evaluate(pdf: pd.DataFrame, tdf: pd.DataFrame | None) -> pd.DataFrame:
-        exc = excluded
-        if tdf is not None and len(tdf):
-            exc = _UnionExc(excluded, tdf["doc_id"].to_numpy(dtype=np.int64))
-        by_term: dict[str, list[_Block]] = {}
-        for r in pdf.itertuples(index=False):
-            by_term.setdefault(r.term, []).append(
-                _Block(r.first_doc, r.last_doc, r.max_tf, r.min_dl, r.max_weight,
-                       r.doc_ids, r.tfs, r.dls, r.weights, getattr(r, "seg", "") or "")
-            )
-        out_qid, out_doc, out_sc = [], [], []
+    def evaluate(pdf: pd.DataFrame, side: pd.DataFrame | None) -> pd.DataFrame:
+        exc = _side_excluded(excluded, side)
+        by_term = _blocks_by_term(pdf)
+        hits = []
         for qid, terms in queries.items():
             ids_all, sc_all = [], []
             for term in terms:
@@ -2042,30 +1749,10 @@ def _lm_part_fn(queries: dict[str, list[str]], denoms: dict[str, float],
             csc = np.concatenate(sc_all)
             uids, inv = np.unique(cids, return_inverse=True)
             tot = np.bincount(inv, weights=csc)
-            tids, tsc = _topk_rows(uids, tot, k)
-            out_qid.extend([qid] * len(tids))
-            out_doc.append(tids)
-            out_sc.append(tsc)
-        if not out_qid:
-            return pd.DataFrame({"qid": [], "doc_id": [], "raw_score": []}).astype(
-                {"doc_id": np.int64, "raw_score": np.float64}
-            )
-        return pd.DataFrame({
-            "qid": out_qid,
-            "doc_id": np.concatenate(out_doc),
-            "raw_score": np.concatenate(out_sc),
-        })
+            hits.append((qid, *_topk_rows(uids, tot, k)))
+        return _result_frame(hits)
 
-    if not with_bulk:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return evaluate(pdf, None)
-
-        return fn
-
-    def cofn(pdf: pd.DataFrame, tdf: pd.DataFrame) -> pd.DataFrame:
-        return evaluate(pdf, tdf)
-
-    return cofn
+    return evaluate
 
 
 def search_lm(
@@ -2086,13 +1773,10 @@ def search_lm(
     behave exactly as in run_queries. (qid, rank, doc_id, score)."""
     if smoothing not in ("dirichlet", "jm", "bm25plus"):
         raise ValueError(f"unknown smoothing {smoothing!r}")
-    cat = Catalog(index_root)
-    manifest = cat.manifest_at(snapshot_id)
-    stats = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    snap = _Snapshot(spark, index_root, snapshot_id)
+    stats = snap.stats
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    drows = cat.read_dictionary(spark, snapshot=manifest).filter(
-        F.col("term").isin(all_terms)
-    ).collect()
+    drows = snap.lookup(all_terms).values()
     k1b = (None, None)
     if smoothing == "bm25plus":
         # BM25+ slot reuse (documented in _lm_part_fn): consts carry the
@@ -2107,34 +1791,10 @@ def search_lm(
         # path evaluates in-engine, folded into each branch's formula at use
         consts = {r["term"]: (r["cf"] / total_c) for r in drows}
     present = [t for t in all_terms if t in consts]
-    postings = cat.read_table(spark, "postings", snapshot=manifest).filter(
-        F.col("term").isin(present)
-    )
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
-    bulk = _load_bulk_df(spark, cat, manifest)
-    if bulk is not None:
-        bp = bulk.withColumn(
-            "doc_part", F.pmod(F.col("doc_id"), F.lit(stats["n_parts"])).cast("int")
-        )
-        per_part = postings.groupBy("doc_part").cogroup(bp.groupBy("doc_part")).applyInPandas(
-            _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam),
-                        excluded, with_bulk=True, k1b=k1b),
-            schema=RESULT_SCHEMA,
-        )
-    else:
-        per_part = postings.groupBy("doc_part").applyInPandas(
-            _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam),
-                        excluded, k1b=k1b),
-            schema=RESULT_SCHEMA,
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    return _shard_search(
+        snap.scan(present), snap.side,
+        _lm_part_fn(queries, consts, k, smoothing, float(mu), float(lam), snap.tombs, k1b=k1b),
+        k)
 
 
 def script_score_cosine_indexed(
@@ -2313,11 +1973,10 @@ def routed_search(
     if unknown:
         raise ValueError(
             f"unknown routing value(s) {unknown} (routes: {rt['routes']})")
-    manifest = cat.manifest_at(snapshot_id)
-    if BULK_TOMBSTONE_TABLE in manifest["tables"]:
+    snap = _Snapshot(spark, index_root, snapshot_id)
+    if snap.side is not None:
         raise ValueError("routed index carries bulk tombstones — "
                          "unsupported state (delete_docs_bulk is guarded)")
-    excluded = _load_tombstones(spark, cat, manifest, include_bulk=False)
     npp = int(rt["parts_per_route"])
     in_route = None
     for v in route_list:
@@ -2327,9 +1986,9 @@ def routed_search(
         in_route = c if in_route is None else (in_route | c)
 
     # route-local corpus stats: one pruned scan of the doc_map slice
-    g = (manifest.get("meta") or {}).get("stats") or cat.read_json("stats")
+    g = snap.stats
     srow = (
-        cat.read_table(spark, "doc_map", snapshot=manifest)
+        cat.read_table(spark, "doc_map", snapshot=snap.manifest)
         .filter(in_route)
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
         .collect()[0]
@@ -2347,33 +2006,12 @@ def routed_search(
     # <= |qterms| rows collected. The global dictionary is NOT consulted —
     # its dfs span all routes.
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    postings = (
-        cat.read_table(spark, "postings", snapshot=manifest)
-        .filter(in_route & F.col("term").isin(all_terms))
-    )
+    postings = snap.postings.filter(in_route & F.col("term").isin(all_terms))
     drows = postings.groupBy("term").agg(F.sum("n").alias("df")).collect()
-    idfs = {
-        r["term"]: math.log(1.0 + (n_docs - r["df"] + 0.5) / (r["df"] + 0.5))
-        for r in drows
-    }
+    idfs = _bm25_idfs(n_docs, {r["term"]: r["df"] for r in drows})
     present = [t for t in all_terms if t in idfs]
-
-    per_part = (
-        postings.filter(F.col("term").isin(present))
-        .groupBy("doc_part")
-        .applyInPandas(
-            _part_scorer(queries, idfs, stats, k, algo, excluded=excluded),
-            schema=RESULT_SCHEMA,
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        per_part.withColumn("score", F.round(F.col("raw_score"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", "score")
-        .orderBy("qid", "rank")
-    )
+    return _shard_search(postings.filter(F.col("term").isin(present)), None,
+                         _part_scorer(queries, idfs, stats, k, algo, snap.tombs), k)
 
 
 def search_bm25_plus(

@@ -10,6 +10,7 @@ from fafnir_spark.codec import (
     f64_encode,
     varint_decode,
     varint_encode,
+    varint_encode_segments,
 )
 
 
@@ -25,6 +26,19 @@ def test_varint_roundtrip(vals):
 def test_delta_roundtrip(ids):
     a = np.array(sorted(ids), dtype=np.uint64)
     assert np.array_equal(delta_decode(delta_encode(a)), a)
+
+
+@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=300),
+       st.lists(st.integers(min_value=0, max_value=300), max_size=12))
+@settings(max_examples=200, deadline=None)
+def test_varint_encode_segments_equals_per_segment_encode(vals, cuts):
+    """One encode pass split at value boundaries is byte-identical to
+    encoding each segment on its own (the posting encoder's contract)."""
+    a = np.array(vals, dtype=np.uint64)
+    edges = sorted([0, len(a), *(min(c, len(a)) for c in cuts)])  # empty segments too
+    lo, hi = np.array(edges[:-1], dtype=np.int64), np.array(edges[1:], dtype=np.int64)
+    segs = varint_encode_segments(a, lo, hi)
+    assert segs == [varint_encode(a[x:y]) for x, y in zip(lo, hi)]
 
 
 def test_varint_empty():

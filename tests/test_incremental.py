@@ -484,10 +484,11 @@ def test_maybe_compact_and_expire_snapshots(spark, tmp_path, split_docs):
 
 def test_bulk_delete_phrase_bool_paths_cogrouped(spark, tmp_path, split_docs, monkeypatch):
     """Every indexed query path — phrase_search, phrase_bm25, bool_search,
-    search_text_indexed, Searcher.search/search_bool — must consume the
-    bulk mass-delete table RELATIONALLY (cogrouped on doc_part), never via
-    the driver closure: the closure envelope is pinned to 1 to prove no
-    path collects the set."""
+    search_text_indexed, Searcher.search/search_bool, search_after_indexed,
+    search_lm, search_bm25_plus, sqs_search — must consume the bulk
+    mass-delete table RELATIONALLY (cogrouped on doc_part), never via the
+    driver closure: the closure envelope is pinned to 1 to prove no path
+    collects the set."""
     import fafnir_spark.wand as wmod
     from fafnir_spark.incremental import delete_docs_bulk
     from fafnir_spark.wand import (
@@ -495,7 +496,11 @@ def test_bulk_delete_phrase_bool_paths_cogrouped(spark, tmp_path, split_docs, mo
         bool_search,
         phrase_bm25,
         phrase_search,
+        search_after_indexed,
+        search_bm25_plus,
+        search_lm,
         search_text_indexed,
+        sqs_search,
     )
 
     docs, _, _ = split_docs
@@ -510,6 +515,7 @@ def test_bulk_delete_phrase_bool_paths_cogrouped(spark, tmp_path, split_docs, mo
         (F.col("doc_id") > 0) & (F.pmod(F.col("doc_id"), F.lit(10)) < 3)
     ).select("doc_id")
     victims = {r["doc_id"] for r in victims_df.collect()}
+    pre_delete = Catalog(root).read_manifest()["snapshot_id"]
     delete_docs_bulk(spark, root, victims_df)
     monkeypatch.setattr(wmod, "_BULK_CLOSURE_LIMIT", 1)
 
@@ -542,6 +548,36 @@ def test_bulk_delete_phrase_bool_paths_cogrouped(spark, tmp_path, split_docs, mo
     assert [(r["doc_id"], r["score"]) for r in sb] == [
         (r["doc_id"], r["score"]) for r in rq
     ]
+
+    # search_after_indexed: the first page is the top of run_queries
+    page = search_after_indexed(spark, root, Q["q"], (float("inf"), -1), k=10).collect()
+    assert [(r["doc_id"], r["score"]) for r in page] == [
+        (r["doc_id"], r["score"]) for r in rq[:10]
+    ]
+
+    # search_lm (dirichlet, jm), search_bm25_plus and sqs_search, each with
+    # k covering every match. Against the pre-delete snapshot: survivors
+    # keep their scores and order (tombstones leave df/avgdl stale until
+    # compaction). Against a build without the victims: the same match set.
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, normalize_docs(docs.join(victims_df, "doc_id", "left_anti"),
+                                      id_col="doc_id", text_col="text"),
+                fresh, n_parts=4, block_size=32, tokenizer="whitespace", build_id="f")
+    n = docs.count()
+    ops = {
+        "dirichlet": lambda r, s: search_lm(spark, r, Q, k=n, snapshot_id=s),
+        "jm": lambda r, s: search_lm(spark, r, Q, k=n, smoothing="jm", snapshot_id=s),
+        "bm25plus": lambda r, s: search_bm25_plus(spark, r, Q, k=n, snapshot_id=s),
+        "sqs": lambda r, s: sqs_search(spark, r, "merge window | customer -slow",
+                                       k=n, snapshot_id=s),
+    }
+    for name, op in ops.items():
+        live = [(r["doc_id"], r["score"]) for r in op(root, None).collect()]
+        assert live and not {d for d, _ in live} & victims, name
+        kept = [(r["doc_id"], r["score"]) for r in op(root, pre_delete).collect()
+                if r["doc_id"] not in victims]
+        assert live == kept, name
+        assert {d for d, _ in live} == {r["doc_id"] for r in op(fresh, None).collect()}, name
 
 
 def test_publish_optimistic_concurrency(spark, tmp_path, split_docs):

@@ -684,3 +684,33 @@ def test_bucketed_join_skips_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
+
+
+def test_scatter_gather_plan_shape(spark, tmp_path):
+    """run_queries and Searcher.search are one scatter-gather: without a
+    bulk tombstone table the shard step is a single grouped-map
+    FlatMapGroupsInPandas and nothing is cogrouped; after
+    delete_docs_bulk the same step is a single FlatMapCoGroupsInPandas
+    (postings cogrouped with the tombstone side relation on doc_part)."""
+    from fafnir_spark.incremental import delete_docs_bulk
+    from fafnir_spark.wand import Searcher
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    root = str(tmp_path / "sg")
+    build_index(spark, normalize_docs(docs, id_col="doc_id", text_col="text"),
+                root, n_parts=4, block_size=32, tokenizer="whitespace", build_id="sg")
+    q = {"a": ["merge", "window"], "b": ["customer"]}
+
+    def plans():
+        return [
+            df._jdf.queryExecution().executedPlan().toString()
+            for df in (run_queries(spark, root, q, k=5), Searcher(spark, root).search(q, k=5))
+        ]
+
+    for plan in plans():
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+    delete_docs_bulk(spark, root, docs.filter(F.col("doc_id") < 50).select("doc_id"))
+    for plan in plans():
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
